@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.asr.{RecWord, WordRecognizer}
 import graft.audio.{Dsp, Pcm}
@@ -11,8 +12,9 @@ import graft.functions.TextFunctions
 import graft.operators.{Align, SequenceMatcher, Sessionize}
 
 /** The reference's end-to-end dataflow (claude_research_optimal.py
-  * main(), :389–696) as one lazily-built Spark DAG — SURVEY.md §3.1's
-  * target shape. The per-document sequential loop becomes
+  * main(), :389–696) as one Spark DAG — SURVEY.md §3.1's target
+  * shape — that [[run]] materializes once, at the fused
+  * assemble→judge→number pass. The per-document sequential loop becomes
   * set-at-a-time operators keyed by (doc_id, group_id); the only
   * shuffles are the doc-keyed cogroups/joins and the final
   * segment-numbering window.
@@ -74,13 +76,16 @@ object AsrPipeline {
 
   /** ClipOutcome + its W6 segment label, as produced by the fused
     * assemble→judge→number pass (numbering needs only within-doc
-    * group order, so it never costs a shuffle).
+    * group order, so it never costs a shuffle). `equal_runs` and
+    * `bridged_groups` are the doc's funnel counts, read off its slice
+    * plan and repeated on each of its rows.
     */
   final case class NumberedOutcome(doc_id: Long, group_id: Long,
       kept: Boolean, reason: String, segment: String,
       text: String, pcm: Array[Byte], sample_rate: Int,
       duration_s: Double, words: Int, pieces: Int, avg_conf: Double,
-      acoustic_quality: String, duration_ms: Long)
+      acoustic_quality: String, duration_ms: Long,
+      equal_runs: Long, bridged_groups: Long)
 
   final case class SegmentRow(doc_id: Long, group_id: Long,
       segment: String, text: String, pcm: Array[Byte], sample_rate: Int,
@@ -91,9 +96,16 @@ object AsrPipeline {
       segment: String, reason: String, duration_ms: Long,
       confidence: Double)
 
+  /** What [[run]] returns. All four frames are projections or
+    * aggregates of `outcomes`, the fused pass that `run` persisted and
+    * computed once, so any number of sinks re-runs no inference.
+    * `release()` frees it once the sinks are written.
+    */
   final case class Result(segments: Dataset[SegmentRow],
       rejections: Dataset[RejectionRow], summary: DataFrame,
-      clipsTsv: DataFrame)
+      clipsTsv: DataFrame, outcomes: Dataset[NumberedOutcome]) {
+    def release(): Unit = outcomes.unpersist()
+  }
 
   // ------------------------------------------------------------ stages
 
@@ -358,21 +370,30 @@ object AsrPipeline {
 
   /** Full pipeline: sources → align → sessionize → assemble → judge →
     * number → summary/TSV frames (sinks are separate, graft.Sinks).
+    *
+    * The fused assemble→judge→number pass runs once, inside `run`: its
+    * rows are persisted MEMORY_AND_DISK (a lost executor recomputes
+    * them from lineage) and forced with one action, so validator
+    * inference runs once per clip whatever the number of sinks. The
+    * `docs` and `asr` caches that feed that pass are released before
+    * `run` returns; a `docs` the caller had persisted stays persisted.
     */
   def run(docs: Dataset[DocInput], base: WordRecognizer,
       validator: WordRecognizer, cfg: Config = Config()): Result = {
     val spark = docs.sparkSession
     import spark.implicits._
 
-    // `docs` (audio + text) and `asr` fan out to several downstream
-    // branches (alignment, sessionization joins, assembly, audio
-    // join) — cache both or the source synthesis/inference re-runs
-    // once per branch. On a cluster these would be persisted
-    // MEMORY_AND_DISK after the (expensive) inference stage.
-    val docsC = docs.cache()
+    // `docs` (audio + text) and `asr` fan out to several branches of
+    // the fused pass (alignment, sessionization joins, planning, audio
+    // join): cache both for that pass, or source synthesis and base
+    // inference re-run once per branch.
+    val ownDocs = docs.storageLevel == StorageLevel.NONE
+    val docsC =
+      if (ownDocs) docs.persist(StorageLevel.MEMORY_AND_DISK) else docs
     val books = bookWords(docsC.map(d => (d.doc_id, d.text)),
       cfg.numbersToWords)
-    val asr = asrWords(docsC, base, cfg.numbersToWords).cache()
+    val asr = asrWords(docsC, base, cfg.numbersToWords)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val runs = Align.lcsEqualRuns(books, asr, cfg.minRun, cfg.lcsMaxChunk)
     val groups = Sessionize.mergeWithSmallGaps(runs, asr,
       cfg.maxGapWords, cfg.maxGapTime)
@@ -386,6 +407,10 @@ object AsrPipeline {
     val numbered: Dataset[NumberedOutcome] =
       plans.joinWith(docsC, plans("doc_id") === docsC("doc_id"))
         .flatMap { case (plan, doc) =>
+          // The plan holds every run of the doc (sessionize's joins are
+          // on the words each run was aligned from, so it drops none).
+          val equalRuns = plan.groups.map(_._2.size.toLong).sum
+          val bridgedGroups = plan.groups.size.toLong
           // clipsForDoc emits ascending group_id, so the W6 window
           // (count of kept rows strictly before, in group order) is a
           // running counter; a rejected group labels the NEXT kept
@@ -399,9 +424,14 @@ object AsrPipeline {
               NumberedOutcome(o.doc_id, o.group_id, o.kept, o.reason,
                 seg, o.text, o.pcm, o.sample_rate, o.duration_s,
                 o.words, o.pieces, o.avg_conf, o.acoustic_quality,
-                o.duration_ms)
+                o.duration_ms, equalRuns, bridgedGroups)
             }
         }
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    numbered.count()
+    asr.unpersist()
+    if (ownDocs) docsC.unpersist()
+
     val segments = numbered.filter($"kept")
       .select($"doc_id", $"group_id", $"segment", $"text", $"pcm",
         $"sample_rate", $"duration_s", $"words", $"pieces", $"avg_conf",
@@ -412,17 +442,13 @@ object AsrPipeline {
         $"reason", $"duration_ms", $"avg_conf".as("confidence"))
       .as[RejectionRow]
 
-    // A5 summary (claude_research_optimal.py:684–694) + run counts
-    val runCounts = runs.groupBy($"doc_id")
-      .agg(count(lit(1)).as("equal_runs"))
-    val groupCounts = groups.select($"doc_id", $"group_id").distinct()
-      .groupBy($"doc_id").agg(count(lit(1)).as("bridged_groups"))
-    val outcomeCounts = numbered.groupBy($"doc_id").agg(
-      sum(when($"kept", 1L).otherwise(0L)).as("exported"),
-      sum(when($"kept", 0L).otherwise(1L)).as("rejected"))
-    val summary = outcomeCounts
-      .join(runCounts, Seq("doc_id"), "left")
-      .join(groupCounts, Seq("doc_id"), "left")
+    // A5 summary (claude_research_optimal.py:684–694) + the funnel
+    // counts the fused rows carry
+    val summary = numbered.groupBy($"doc_id").agg(
+        sum(when($"kept", 1L).otherwise(0L)).as("exported"),
+        sum(when($"kept", 0L).otherwise(1L)).as("rejected"),
+        max($"equal_runs").as("equal_runs"),
+        max($"bridged_groups").as("bridged_groups"))
       .withColumn("rejection_rate_pct",
         when($"exported" + $"rejected" > 0,
           round($"rejected" * 100.0 / ($"exported" + $"rejected"), 2))
@@ -442,6 +468,6 @@ object AsrPipeline {
       format_string("%.3f", $"avg_conf").as("avg_conf"),
       $"acoustic_quality", $"doc_id", $"group_id")
 
-    Result(segments, rejections, summary, clipsTsv)
+    Result(segments, rejections, summary, clipsTsv, numbered)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.audio.Pcm
@@ -83,14 +83,19 @@ object Sinks {
     }
   }
 
-  /** K2 + K4 — clips.tsv, rejections.json, summary.json per run. */
+  /** K2 + K4 — clips.tsv, rejections.json, summary.json per run. Clip
+    * and rejection rows land in (doc_id, group_id) order, whatever the
+    * partitioning of the frames they are read from.
+    */
   def writeMetadata(result: Result, outDir: String): Unit = {
-    result.clipsTsv
-      .coalesce(1).write.mode("overwrite")
+    def inClipOrder(df: DataFrame) =
+      df.coalesce(1).sortWithinPartitions("doc_id", "group_id")
+    inClipOrder(result.clipsTsv)
+      .write.mode("overwrite")
       .option("sep", "\t").option("header", true)
       .csv(s"$outDir/clips_tsv")
-    result.rejections.toDF()
-      .coalesce(1).write.mode("overwrite").json(s"$outDir/rejections_json")
+    inClipOrder(result.rejections.toDF())
+      .write.mode("overwrite").json(s"$outDir/rejections_json")
     result.summary
       .coalesce(1).write.mode("overwrite").json(s"$outDir/summary_json")
   }

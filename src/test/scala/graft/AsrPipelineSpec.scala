@@ -1,10 +1,15 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.LongAccumulator
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.asr.AmplitudeRecognizer
+import graft.asr.{AmplitudeRecognizer, RecWord, WordRecognizer}
 import graft.audio.Pcm
 import graft.AsrPipeline._
+import graft.operators.{Align, Sessionize}
 
 /** End-to-end pipeline test (SURVEY.md §5.2 item 4): synthetic docs
   * whose audio encodes the word sequence (AmplitudeRecognizer), a
@@ -143,14 +148,15 @@ class AsrPipelineSpec extends AnyFunSuite {
       java.nio.file.Paths.get(out, "clips_tsv")).count() > 0)
   }
 
-  test("fused run() equals the staged assemble->judge->number path") {
+  /** Two docs, so the per-doc numbering reset is exercised: doc 1 is
+    * the three-group fixture above; doc 2 is the too_short
+    * construction from the quirk test (two groups, the second
+    * squeezed under min_dur -> one rejection).
+    */
+  private def twoDocs(): Dataset[DocInput] = {
     val s = spark
     import s.implicits._
-    // two docs so the per-doc numbering reset is exercised; doc 2
-    // includes a too-short group (words 0-2 only) to get a rejection
     val audio1 = AmplitudeRecognizer.synthesize(timeline, Sr)
-    // doc 2 = the too_short construction from the quirk test above:
-    // two groups, the second squeezed under min_dur -> one rejection
     val shortTl = (0 until 6).map(i =>
       (s"word$i", i * 0.5, i * 0.5 + 0.4)) ++
       (6 until 10).map(i =>
@@ -158,10 +164,16 @@ class AsrPipelineSpec extends AnyFunSuite {
     val audio2 = AmplitudeRecognizer.synthesize(shortTl, Sr)
     val text2 = (0 until 10).map(i =>
       if (i == 5) "zzz" else s"word$i").mkString(" ")
-    val docs = Seq(
+    Seq(
       DocInput(1L, transcript, audio1.bytes, Sr),
       DocInput(2L, text2, audio2.bytes, Sr)
-    ).toDS().cache()
+    ).toDS()
+  }
+
+  test("fused run() equals the staged assemble->judge->number path") {
+    val s = spark
+    import s.implicits._
+    val docs = twoDocs().cache()
     val cfg = Config()
     val fused = AsrPipeline.run(docs, rec, rec, cfg)
 
@@ -188,5 +200,95 @@ class AsrPipelineSpec extends AnyFunSuite {
       .toSeq == rejStaged.collect().map(rejKey).sortBy(k => (k._1, k._2))
       .toSeq)
     assert(fused.rejections.count() >= 1)
+    // run() released only what it cached: the caller's docs stay
+    assert(docs.storageLevel != StorageLevel.NONE)
+    fused.release()
+    docs.unpersist()
+  }
+
+  test("one validator call per judged clip across all four sinks") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val base = new CountingRecognizer(rec, sc.longAccumulator("base"))
+    val validator =
+      new CountingRecognizer(rec, sc.longAccumulator("validator"))
+    val r = AsrPipeline.run(twoDocs(), base, validator, Config())
+    val out = java.nio.file.Files.createTempDirectory("graft_calls").toString
+    Sinks.writeClips(r.segments, out)
+    Sinks.writeMetadata(r, out)
+    Sinks.writeFullCorpus(r.segments, out, 500)
+    Sinks.writeWordCoverage(r.segments, out)
+    val judged = r.segments.count() + r.rejections.count()
+    assert(judged == 5L) // doc 1: 3 kept; doc 2: 1 kept + 1 rejected
+    assert(validator.calls.value == judged)
+    assert(base.calls.value == 2L)
+    r.release()
+    assert(r.outcomes.storageLevel == StorageLevel.NONE)
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"persisted RDDs left behind: $left")
+  }
+
+  test("summary equals the staged runs/groups derivation") {
+    val s = spark
+    import s.implicits._
+    // doc 3: one five-word run squeezed into 1.08 s, so its only group
+    // is too_short and the doc exports nothing
+    val tl3 = (0 until 5).map(i => (s"word$i", i * 0.22, i * 0.22 + 0.2))
+    val doc3 = DocInput(3L, (0 until 5).map(i => s"word$i").mkString(" "),
+      AmplitudeRecognizer.synthesize(tl3, Sr).bytes, Sr)
+    val docs = twoDocs().union(Seq(doc3).toDS()).cache()
+    val cfg = Config()
+    val r = AsrPipeline.run(docs, rec, rec, cfg)
+
+    // runs and groups counted separately from the staged operators,
+    // then left-joined onto the per-doc outcome counts
+    val books = AsrPipeline.bookWords(
+      docs.map(d => (d.doc_id, d.text)), cfg.numbersToWords)
+    val asr = AsrPipeline.asrWords(docs, rec, cfg.numbersToWords)
+    val runs = Align.lcsEqualRuns(books, asr, cfg.minRun, cfg.lcsMaxChunk)
+    val groups = Sessionize.mergeWithSmallGaps(
+      runs, asr, cfg.maxGapWords, cfg.maxGapTime)
+    val outcomes = AsrPipeline.judgeClips(
+      AsrPipeline.assembleClips(asr, groups, docs, cfg), rec, cfg)
+    val staged = outcomes.groupBy($"doc_id").agg(
+        sum(when($"kept", 1L).otherwise(0L)).as("exported"),
+        sum(when($"kept", 0L).otherwise(1L)).as("rejected"))
+      .join(runs.groupBy($"doc_id").agg(count(lit(1)).as("equal_runs")),
+        Seq("doc_id"), "left")
+      .join(groups.select($"doc_id", $"group_id").distinct()
+        .groupBy($"doc_id").agg(count(lit(1)).as("bridged_groups")),
+        Seq("doc_id"), "left")
+      .withColumn("rejection_rate_pct",
+        when($"exported" + $"rejected" > 0,
+          round($"rejected" * 100.0 / ($"exported" + $"rejected"), 2))
+          .otherwise(0.0))
+      .withColumn("status",
+        when($"exported" > 0, "success").otherwise("failed"))
+
+    assert(r.summary.columns.toSeq == Seq("doc_id", "exported", "rejected",
+      "equal_runs", "bridged_groups", "rejection_rate_pct", "status"))
+    assert(r.summary.columns.toSeq == staged.columns.toSeq)
+    def rows(df: DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    assert(rows(r.summary) == rows(staged))
+    val byDoc = r.summary.collect()
+      .map(x => x.getAs[Long]("doc_id") -> x).toMap
+    assert(byDoc.keySet == Set(1L, 2L, 3L))
+    assert(byDoc(2L).getAs[Long]("rejected") == 1L)
+    assert(byDoc(3L).getAs[Long]("exported") == 0L)
+    assert(byDoc(3L).getAs[String]("status") == "failed")
+    r.release()
+    docs.unpersist()
+  }
+}
+
+/** Test-only decorator: counts the wrapped recognizer's calls on the
+  * executors.
+  */
+final class CountingRecognizer(inner: WordRecognizer,
+    val calls: LongAccumulator) extends WordRecognizer {
+  def transcribe(key: String, audio: Pcm): Seq[RecWord] = {
+    calls.add(1)
+    inner.transcribe(key, audio)
   }
 }
